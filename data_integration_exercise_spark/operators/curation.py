@@ -1816,8 +1816,9 @@ def _lloyd_centroids(q, iters: int = 3):
     md5(vec_id) rows of THIS frame; every step is integer-exact with
     (d2, cluster) argmin tie-breaks, so the trajectory is identical
     across engines and partitionings. Returns ((cluster, carr) frame,
-    assign_fn) where assign_fn(centroids) labels q's vectors with their
-    nearest centroid and exact integer d2.
+    assign_fn) where assign_fn() labels q's vectors with their nearest
+    trained centroid and exact integer d2; assign_fn.n_total is |q| from
+    the last training rollup and raises AttributeError when iters == 0.
 
     Round-14 shape: the k·dim centroid table lives ON THE DRIVER between
     iterations (k = 8 fixed — O(1) state at any corpus size, the standard
@@ -1906,7 +1907,7 @@ def _lloyd_centroids(q, iters: int = 3):
         )
 
     dim = len(cents[0]) if cents else 0
-    n_total = 0
+    n_total = None
     for _ in range(iters):
         cent_rows = (
             assign_with(cents, cent_ids)
@@ -1946,9 +1947,11 @@ def _lloyd_centroids(q, iters: int = 3):
         # different centroid frame (ADVICE r14 item 2)
         return assign_with(cents, cent_ids)
 
-    # corpus cardinality, free from the last training rollup (0 when
-    # iters == 0 was never trained — no consumer uses that combination)
-    assign.n_total = n_total
+    # corpus cardinality, free from the last training rollup; with
+    # iters == 0 there is no rollup, so the attribute is left unset and
+    # reading it raises instead of sizing a consumer from a silent 0
+    if n_total is not None:
+        assign.n_total = n_total
 
     return carr, assign
 

@@ -858,8 +858,10 @@ def sample_coreset_kcenter(spark, sf_dir):
     out_schema = "rank long, vec_id long, label int, coverage_radius_d2 long"
     if not seed_rows:  # empty corpus → empty selection, like the old shape
         return spark.createDataFrame([], out_schema)
+    # label passes through as collected (int or None): the column is
+    # nullable and an int() here would raise on a null label
     r0 = seed_rows[0]
-    chosen = [(1, int(r0["vec_id"]), int(r0["label"]), [int(x) for x in r0["qv"]])]
+    chosen = [(1, int(r0["vec_id"]), r0["label"], [int(x) for x in r0["qv"]])]
 
     for i in range(2, _KCENTER_K + 1):
         pick = (
@@ -870,7 +872,7 @@ def sample_coreset_kcenter(spark, sf_dir):
             .collect()[0]
         )
         chosen.append(
-            (i, int(pick["vec_id"]), int(pick["label"]), [int(x) for x in pick["qv"]])
+            (i, int(pick["vec_id"]), pick["label"], [int(x) for x in pick["qv"]])
         )
 
     radius = int(

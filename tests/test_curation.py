@@ -504,3 +504,22 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
         r.vec_id: (r.cluster, r.d2) for r in assign().collect()
     }
     assert got_assign == expect_assign
+
+
+def test_lloyd_centroids_n_total_unset_without_training(spark):
+    """assign.n_total is |q| read from the last training rollup; with
+    iters=0 there is no rollup, so reading it must raise rather than hand
+    a consumer (plan_ivf_probe_geometry's block sizing) a silent 0."""
+    from data_integration_exercise_spark.operators.curation import (
+        _lloyd_centroids,
+    )
+
+    q = spark.createDataFrame(
+        [(i, "x", [i, 0]) for i in range(10)],
+        "vec_id long, label string, qarr array<long>",
+    )
+    _, trained = _lloyd_centroids(q, iters=1)
+    assert trained.n_total == 10
+    _, untrained = _lloyd_centroids(q, iters=0)
+    with pytest.raises(AttributeError):
+        untrained.n_total

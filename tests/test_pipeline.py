@@ -281,6 +281,56 @@ def test_connected_components_absorb_neardup_pairs(spark):
     assert (grp.index.values == grp.values).all()
 
 
+def test_hook_and_contract_equals_full_propagation(spark):
+    """The contracted graph is a lossless prune: at the test SF its labels
+    equal propagate_min_labels over the full undirected pair list, and its
+    edge list is a small fraction of the pair stream (measured 720 directed
+    edges, i.e. 360 contracted + tree edges, against 7943 pairs)."""
+    from pyspark.sql import functions as F
+
+    pairs = pipeline._lsh_scored_pairs(
+        spark,
+        SF,
+        perms=pipeline.MINHASH_PERMS_WIDE,
+        rows_per_band=pipeline.WIDE_ROWS_PER_BAND,
+        same_lang=True,
+    ).select("doc1", "doc2")
+    docs = pipeline._doc_masks(spark, SF).select("doc_id")
+    labels, edges = pipeline.hook_and_contract(pairs, docs)
+    got = pipeline.propagate_min_labels(labels, edges).toPandas()
+
+    full_edges = pairs.select(
+        F.col("doc1").alias("src"), F.col("doc2").alias("dst")
+    ).unionByName(pairs.select(F.col("doc2").alias("src"), F.col("doc1").alias("dst")))
+    ident = docs.select("doc_id", F.col("doc_id").alias("component"))
+    want = pipeline.propagate_min_labels(ident, full_edges).toPandas()
+
+    key = ["doc_id"]
+    assert got.sort_values(key).reset_index(drop=True).equals(
+        want.sort_values(key).reset_index(drop=True)
+    )
+    n_pairs, n_edges = pairs.count(), edges.count()
+    assert n_edges * 8 <= n_pairs, (n_edges, n_pairs)
+
+
+def test_hook_and_contract_keeps_components_hooking_splits(spark):
+    """Edges 1–5, 5–6, 6–2: the hooks give p(5)=1 and p(6)=2, which alone
+    would split the component in two; only the relabelled pair (5, 6) →
+    (1, 2) joins them. Isolated doc 9 stays its own component."""
+    pairs = spark.createDataFrame([(1, 5), (5, 6), (2, 6)], "doc1 long, doc2 long")
+    docs = spark.createDataFrame([(d,) for d in (1, 2, 5, 6, 9)], "doc_id long")
+    labels, edges = pipeline.hook_and_contract(pairs, docs)
+    assert {r.doc_id: r.component for r in labels.collect()} == {
+        1: 1, 2: 2, 5: 1, 6: 2, 9: 9,
+    }
+    assert {(r.src, r.dst) for r in edges.collect()} == {
+        (1, 2), (2, 1),  # the contracted pair
+        (1, 5), (5, 1), (2, 6), (6, 2),  # tree edges (p(v), v)
+    }
+    out = pipeline.propagate_min_labels(labels, edges).collect()
+    assert {r.doc_id: r.component for r in out} == {1: 1, 2: 1, 5: 1, 6: 1, 9: 9}
+
+
 def _chain_graph(spark, n):
     """Undirected path 0-1-…-n: diameter n, worst case for label propagation."""
     labels = spark.createDataFrame(

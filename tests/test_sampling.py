@@ -436,3 +436,16 @@ def test_token_stream_batches_fill_exactly(spark):
         .first()[0]
     )
     assert total == corpus_tokens
+
+
+def test_kcenter_passes_null_labels_through(spark, tmp_path):
+    """embeddings.label is nullable: the driver-side k-center loop must
+    carry a null label into its output row instead of raising on it."""
+    from pyspark.sql import functions as F
+
+    load_table(spark, SF, "embeddings").withColumn(
+        "label", F.lit(None).cast("int")
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    rows = sampling.QUERIES["sample_coreset_kcenter"](spark, str(tmp_path)).collect()
+    assert sorted(r.rank for r in rows) == list(range(1, sampling._KCENTER_K + 1))
+    assert all(r.label is None for r in rows)
